@@ -19,7 +19,7 @@ decimal fold of dec9-quantized components — so the whole trajectory is
 bit-reproducible under any partitioning and recomputed by the
 independent twin (``plans/train_oracle.py:_stack_losses``).
 
-Scale posture (the r4/r5 swaps, now the DEFAULT paths):
+Scale posture (one code path per pass):
 
 - **root sharding**: the train-split root set is never collected
   whole — batch assignment is a Spark-side portable knuth hash and
@@ -27,21 +27,25 @@ Scale posture (the r4/r5 swaps, now the DEFAULT paths):
   residency; the reference analog is the batched seed nodes of
   ``HGTLoader``, ``experiments/blueprint_mlflow.py:119-133``).
 - **batching**: per-step receptive fields are pruned with broadcast
-  semi-joins on a batch-key frame (never a driver-side ``isin``
-  literal) — level 1 against the batch roots, level i against the kept
-  level-(i-1) keys — and materialized ONCE per batch (the
-  portable-hash batches never change across epochs).
+  semi-joins on a batch-key frame — level 1 against the batch roots,
+  level i against the kept level-(i-1) keys — and materialized ONCE
+  per batch (the portable-hash batches never change across epochs).
 - **gradients down the stack**: dL/dhbar flows as a JOINED frame
   ``(key, gout, deg)`` — level 1's comes from the driver head step
   (bounded by batch size), deeper levels are produced by a per-row
   Spark job; no driver dict ever holds a non-root level.
-- **eval**: the final accuracy pass joins the trained ``hbar`` onto
-  the root frame and predicts in an Arrow UDF — the root frame is
-  never collected (``_eval_mode="collect"`` retains the driver-side
-  path purely so tests can pin bit-equality of the two).
+- **eval and predict**: one root scorer (:func:`_score_roots`) joins
+  the trained top ``hbar`` fold onto the root frame and predicts in an
+  Arrow UDF — the root frame is never collected. The trainer's
+  per-split metric is a ``groupBy("split")`` over it;
+  :func:`predict_relational_stack` returns it.
 - intermediate hbar frames are ``cut_lineage``'d per step, so each
   backward job reuses the materialized fold instead of recomputing
   the deeper layers.
+
+The reference for every loss and per-split metric is the independent
+twin ``plans/train_oracle.py:_stack_losses`` (``with_accuracy=True``
+adds the metric), which replays them bit for bit.
 """
 
 from __future__ import annotations
@@ -151,7 +155,7 @@ FRAME_EMB_THRESHOLD = 50_000
 def _resolve_frame_emb(spec: EdgeLayerSpec, card: int) -> bool:
     """Shared CONFIG with the oracle twin (like the spec itself): does
     this layer train its embedding as a frame?"""
-    storage = getattr(spec, "emb_storage", "auto")
+    storage = spec.emb_storage
     if storage not in ("auto", "driver", "frame"):
         raise ValueError(f"emb_storage must be auto|driver|frame, got {storage!r}")
     return storage == "frame" or (storage == "auto" and card >= FRAME_EMB_THRESHOLD)
@@ -319,6 +323,35 @@ def _assemble_child_frame(
     )
 
 
+def _kernel_cols(Ec, with_child: bool, *extra: str) -> list[str]:
+    """Input columns of a layer kernel, in its argument order: the code
+    (or the joined ``__evec`` in frame mode), ``x``, the ``extra``
+    columns, then the child hbar when the layer has a deeper child —
+    the kernel's ``*chb`` tail, empty for the deepest layer."""
+    first = "__evec" if Ec is None else "code"
+    return [first, "x", *extra] + (["__child_hbar"] if with_child else [])
+
+
+def _layer_inputs(Ec, code, x, chb) -> np.ndarray:
+    """A layer kernel's per-row input matrix ``[emb ++ x (++ child
+    hbar)]``; ``chb`` holds the child-hbar column, or nothing for the
+    deepest layer."""
+    return np.concatenate(
+        [_emb_rows(Ec, code), np.vstack(x.to_list())]
+        + [np.vstack(c.to_list()) for c in chb],
+        axis=1,
+    )
+
+
+def _layer_delta(Ec, Wc, bc, code, x, gout, gdeg, chb):
+    """Backprop through one layer's tanh: ``(X, delta)`` with ``delta
+    = gout/gdeg * (1 - h²)`` per row."""
+    X = _layer_inputs(Ec, code, x, chb)
+    G = np.vstack(gout.to_list()) / gdeg.to_numpy(dtype=np.float64)[:, None]
+    H = np.tanh(row_logits(X, Wc, bc))
+    return X, G * (1.0 - H * H)
+
+
 def _with_child_hbar(frame: DataFrame, child_hb: DataFrame | None, d_child: int):
     """Join the child level's fold ``(parent_key, deg, hbar)`` onto
     this level's rows by ``child_key``; rows without children get a
@@ -363,40 +396,21 @@ def _layer_forward_frame(
     Ec = None if _is_frame_emb(E) else E.copy()
     Wc, bc = W.copy(), b.copy()
     frame = _with_emb(_with_child_hbar(frame, child_hb, d_child), E)
-    first = "__evec" if Ec is None else "code"
 
-    if child_hb is None:
+    def h_fn(code, x, *chb):
+        H = np.tanh(row_logits(_layer_inputs(Ec, code, x, chb), Wc, bc))
+        return pd.Series([[_dec9_py(Decimal, v) for v in row] for row in H])
 
-        def h_fn(code, x):
-            X = np.concatenate([_emb_rows(Ec, code), np.vstack(x.to_list())], axis=1)
-            H = np.tanh(row_logits(X, Wc, bc))
-            return pd.Series([[_dec9_py(Decimal, v) for v in row] for row in H])
-
-        h_fn.__annotations__ = {"code": pd.Series, "x": pd.Series, "return": pd.Series}
-        udf = pandas_udf(h_fn, f"array<{DECIMAL_TYPE}>")
-        h = frame.select("parent_key", udf(first, "x").alias("h"))
-    else:
-
-        def h_fn(code, x, chb):
-            X = np.concatenate(
-                [
-                    _emb_rows(Ec, code),
-                    np.vstack(x.to_list()),
-                    np.vstack(chb.to_list()),
-                ],
-                axis=1,
-            )
-            H = np.tanh(row_logits(X, Wc, bc))
-            return pd.Series([[_dec9_py(Decimal, v) for v in row] for row in H])
-
-        h_fn.__annotations__ = {
-            "code": pd.Series,
-            "x": pd.Series,
-            "chb": pd.Series,
-            "return": pd.Series,
-        }
-        udf = pandas_udf(h_fn, f"array<{DECIMAL_TYPE}>")
-        h = frame.select("parent_key", udf(first, "x", "__child_hbar").alias("h"))
+    h_fn.__annotations__ = {
+        "code": pd.Series,
+        "x": pd.Series,
+        "chb": pd.Series,
+        "return": pd.Series,
+    }
+    udf = pandas_udf(h_fn, f"array<{DECIMAL_TYPE}>")
+    h = frame.select(
+        "parent_key", udf(*_kernel_cols(Ec, child_hb is not None)).alias("h")
+    )
 
     sums = h.groupBy("parent_key").agg(
         F.count(F.lit(1)).alias("deg"),
@@ -473,52 +487,25 @@ def _layer_backward_fold(
     frame_mode = _is_frame_emb(E)
     Ec = None if frame_mode else E.copy()
     Wc, bc = W.copy(), b.copy()
-    first = "__evec" if frame_mode else "code"
 
-    def make_out(codes, xs, chbs, gouts, gdegs):
-        parts = [_emb_rows(Ec, codes), np.vstack(xs.to_list())]
-        if chbs is not None:
-            parts.append(np.vstack(chbs.to_list()))
-        X = np.concatenate(parts, axis=1)
-        G = np.vstack(gouts.to_list()) / gdegs.to_numpy(dtype=np.float64)[:, None]
-        H = np.tanh(row_logits(X, Wc, bc))
-        D = G * (1.0 - H * H)
+    def g_fn(code, x, gout, gdeg, *chb):
+        X, D = _layer_delta(Ec, Wc, bc, code, x, gout, gdeg, chb)
         out = np.concatenate(
             [(X[:, :, None] * D[:, None, :]).reshape(len(X), -1), D], axis=1
         )
         return pd.Series([[_dec9_py(Decimal, v) for v in row] for row in out])
 
-    if with_child:
-
-        def g_fn(code, x, chb, gout, gdeg):
-            return make_out(code, x, chb, gout, gdeg)
-
-        g_fn.__annotations__ = {
-            "code": pd.Series,
-            "x": pd.Series,
-            "chb": pd.Series,
-            "gout": pd.Series,
-            "gdeg": pd.Series,
-            "return": pd.Series,
-        }
-        udf = pandas_udf(g_fn, f"array<{DECIMAL_TYPE}>")
-        g = joined.select(
-            "code", udf(first, "x", "__child_hbar", "__gout", "__gdeg").alias("g")
-        )
-    else:
-
-        def g_fn(code, x, gout, gdeg):
-            return make_out(code, x, None, gout, gdeg)
-
-        g_fn.__annotations__ = {
-            "code": pd.Series,
-            "x": pd.Series,
-            "gout": pd.Series,
-            "gdeg": pd.Series,
-            "return": pd.Series,
-        }
-        udf = pandas_udf(g_fn, f"array<{DECIMAL_TYPE}>")
-        g = joined.select("code", udf(first, "x", "__gout", "__gdeg").alias("g"))
+    g_fn.__annotations__ = {
+        "code": pd.Series,
+        "x": pd.Series,
+        "gout": pd.Series,
+        "gdeg": pd.Series,
+        "chb": pd.Series,
+        "return": pd.Series,
+    }
+    udf = pandas_udf(g_fn, f"array<{DECIMAL_TYPE}>")
+    cols = _kernel_cols(Ec, with_child, "__gout", "__gdeg")
+    g = joined.select("code", udf(*cols).alias("g"))
 
     if not frame_mode:
         rows = (
@@ -600,35 +587,120 @@ def _layer_g_next_frame(
 
     Ec = None if _is_frame_emb(E) else E.copy()
     Wc, bc = W.copy(), b.copy()
-    first = "__evec" if Ec is None else "code"
     WhT = W[d_e + nx :].T.copy()  # (d, d_child)
     zeros = np.zeros(d_child)
 
-    def gn_fn(code, x, chb, gout, gdeg):
-        X = np.concatenate(
-            [_emb_rows(Ec, code), np.vstack(x.to_list()), np.vstack(chb.to_list())],
-            axis=1,
-        )
-        G = np.vstack(gout.to_list()) / gdeg.to_numpy(dtype=np.float64)[:, None]
-        H = np.tanh(row_logits(X, Wc, bc))
-        D = G * (1.0 - H * H)
+    def gn_fn(code, x, gout, gdeg, chb):
+        _, D = _layer_delta(Ec, Wc, bc, code, x, gout, gdeg, (chb,))
         out = row_logits(D, WhT, zeros)
         return pd.Series([list(map(float, row)) for row in out])
 
     gn_fn.__annotations__ = {
         "code": pd.Series,
         "x": pd.Series,
-        "chb": pd.Series,
         "gout": pd.Series,
         "gdeg": pd.Series,
+        "chb": pd.Series,
         "return": pd.Series,
     }
     udf = pandas_udf(gn_fn, "array<double>")
     return joined.select(
         F.col("child_key").alias("key"),
-        udf(first, "x", "__child_hbar", "__gout", "__gdeg").alias("gout"),
+        udf(*_kernel_cols(Ec, True, "__gout", "__gdeg")).alias("gout"),
         F.col("__child_deg").alias("gdeg"),
     )
+
+
+def _layer_dims(layers: tuple[EdgeLayerSpec, ...]) -> list[tuple[int, int, int, int]]:
+    """``(d_e, nx, d, m_i)`` per layer: embedding width, feature
+    count, hidden width, and the input width ``d_e + nx + d_child``
+    (``d_child`` = the next layer's hidden width, 0 at the bottom)."""
+    dims = []
+    for i, spec in enumerate(layers):
+        d_child = layers[i + 1].hidden_dim if i + 1 < len(layers) else 0
+        m_i = spec.emb_dim + spec.n_feats + d_child
+        dims.append((spec.emb_dim, spec.n_feats, spec.hidden_dim, m_i))
+    return dims
+
+
+def _forward_chain(level_frames, l_emb, l_W, l_b, dims):
+    """The bottom-up ``_layer_forward_frame`` chain. Returns ``(top
+    fold keyed by root, child_hb_for)`` — ``child_hb_for[i]`` is the
+    lineage-cut fold of layer ``i + 1`` that layer ``i`` joins (None
+    for the deepest layer)."""
+    L = len(dims)
+    child_hb_for: dict[int, DataFrame | None] = {L - 1: None}
+    hb = None
+    for i in reversed(range(L)):
+        d_child = dims[i + 1][2] if i + 1 < L else 0
+        hb = _layer_forward_frame(
+            level_frames[i], l_emb[i], l_W[i], l_b[i], dims[i][2],
+            child_hb=hb, d_child=d_child,
+        )
+        if i > 0:
+            hb = cut_lineage(hb, eager=True)
+            child_hb_for[i - 1] = hb
+    return hb, child_hb_for
+
+
+def _score_roots(frame, top_hb, emb, W_head, b_head, d1, task):
+    """The root scorer shared by the trainer's eval and
+    :func:`predict_relational_stack`: left-join the top fold's hbar
+    onto the root frame (childless roots get a zero hbar) and predict
+    every root in ONE Arrow pass with the fixed-order ``row_logits``
+    head — ``(node_id, label, split, pred)``, nothing root-sized on
+    the driver. ``pred`` is the argmax class, or for regression the
+    prediction in standardized-label space."""
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    regression = task == "regression"
+    Ec, Wc, bc = emb.copy(), W_head.copy(), b_head.copy()
+
+    def pred_fn(code, nums, hbar):
+        codes = code.to_numpy(dtype=np.int64)
+        X = np.concatenate(
+            [Ec[codes], np.vstack(nums.to_list()), np.vstack(hbar.to_list())], axis=1
+        )
+        out = row_logits(X, Wc, bc)
+        if regression:
+            return pd.Series(out[:, 0])
+        return pd.Series(np.argmax(out, axis=1).astype(np.int64))
+
+    pred_fn.__annotations__ = {
+        "code": pd.Series,
+        "nums": pd.Series,
+        "hbar": pd.Series,
+        "return": pd.Series,
+    }
+    pudf = pandas_udf(pred_fn, "double" if regression else "bigint")
+    zeros = F.array(*[F.lit(0.0)] * d1)
+    return (
+        frame.join(
+            top_hb.select(F.col("parent_key").alias("node_id"), "hbar"),
+            "node_id",
+            "left",
+        )
+        .withColumn("hbar", F.coalesce("hbar", zeros))
+        .select("node_id", "label", "split", pudf("code", "nums", "hbar").alias("pred"))
+    )
+
+
+def _split_metric(scored: DataFrame, task: str) -> dict[str, float]:
+    """Per-split metric over :func:`_score_roots` — accuracy for
+    classification, MSE in standardized-label space for regression.
+    The MSE is an exact decimal fold: a plain avg of doubles depends
+    on the partition summation order."""
+    if task == "regression":
+        err = F.col("pred") - F.col("label")
+        metric = (
+            F.sum((err * err).cast(DECIMAL_TYPE)).cast("double")
+            / F.count(F.lit(1))
+        )
+    else:
+        metric = F.avg((F.col("pred") == F.col("label")).cast("double"))
+    rows = scored.groupBy("split").agg(metric.alias("m")).collect()
+    return {r["split"]: r["m"] for r in rows}
 
 
 def train_relational_stack(
@@ -648,9 +720,6 @@ def train_relational_stack(
     neighbor_budget: int | None = 5,
     task: str = "classification",
     fit_fn=None,
-    _batch_mode: str = "semi",
-    _eval_mode: str = "join",
-    _root_mode: str = "shard",
 ) -> TrainResult:
     """Minibatch SGD through a depth-(L+1) stack declared by
     ``layers`` — see the module docstring for the model, the
@@ -672,28 +741,19 @@ def train_relational_stack(
     entirely (e.g. materialize to Parquet shards and run DDP); the
     assembly plans are identical either way.
 
-    ``_batch_mode``/``_eval_mode``/``_root_mode`` select the scale
-    paths ("semi", "join", "shard" — the defaults) or the driver-side
-    reference paths ("isin", "collect", "collect"); both members of
-    each pair are bit-identical by construction and pinned so in
-    tests. ``_root_mode="shard"`` (VERDICT r5 #1) computes the
-    portable-hash batch assignment IN SPARK and collects only the
-    current batch's root rows per step, so driver residency in the
-    training loop is O(batch), never O(roots); "collect" is the
-    original up-front all-train-roots materialization (the reference
-    trainer's memory shape, ``experiments/blueprint_mlflow.py:119-133``
-    seed-node batches).
+    Batches are the portable-hash buckets of the root ids, computed IN
+    SPARK; each step collects only its own batch's root rows, so driver
+    residency in the training loop is O(batch), never O(roots) (the
+    reference trainer's seed-node batches,
+    ``experiments/blueprint_mlflow.py:119-133``). Every loss and the
+    final per-split metric are replayed bit for bit by the independent
+    twin ``plans/train_oracle.py:_stack_losses``.
     """
-    from ..functions.hashing import knuth_hash, knuth_hash_py
+    from ..functions.hashing import knuth_hash
 
     L = len(layers)
     if L == 0:
         raise ValueError("train_relational_stack needs at least one layer spec")
-    if _batch_mode == "isin" and _root_mode != "collect":
-        raise ValueError(
-            "_batch_mode='isin' needs the driver-side root ids — "
-            "use _root_mode='collect' with it"
-        )
     for i in range(L - 1):
         if layers[i].key is None:
             raise ValueError(
@@ -723,18 +783,33 @@ def train_relational_stack(
     if fit_fn is not None:
         return fit_fn(frame, frames, meta)
 
-    # the seed-node set. "shard" computes the batch assignment in
-    # Spark with the SAME portable knuth hash and collects only one
-    # batch's rows at a time; "collect" materializes all train roots
-    # up-front (the reference trainer's memory shape). Both orders are
-    # node_id-sorted per batch, so the head-step arrays — and hence
-    # the whole trajectory — are bit-identical between the modes.
-    train_f = frame.filter(F.col("split") == "train").select(
-        "node_id", "code", "nums", "label"
+    # the seed-node set: the batch assignment is the portable knuth
+    # hash computed in Spark, and each step collects only its own
+    # batch's rows, node_id-sorted
+    train_f = cut_lineage(
+        frame.filter(F.col("split") == "train").select(
+            "node_id",
+            "code",
+            "nums",
+            "label",
+            (knuth_hash(F.col("node_id"), seed + 7) % F.lit(n_batches)).alias(
+                "__batch"
+            ),
+        ),
+        eager=True,
     )
+    present = {
+        int(r["__batch"]) for r in train_f.select("__batch").distinct().collect()
+    }
+    if present != set(range(n_batches)):
+        raise ValueError(
+            "train_relational_stack: a batch is empty — lower n_batches "
+            "or grow the input"
+        )
     y_dtype = np.float64 if task == "regression" else np.int64
 
-    def _to_arrays(rows):
+    def batch_arrays(bi):
+        rows = train_f.filter(F.col("__batch") == bi).drop("__batch").collect()
         rows.sort(key=lambda r: r["node_id"])
         return (
             np.array([r["node_id"] for r in rows], dtype=np.int64),
@@ -742,59 +817,6 @@ def train_relational_stack(
             np.array([list(r["nums"]) for r in rows], dtype=np.float64),
             np.array([r["label"] for r in rows], dtype=y_dtype),
         )
-
-    if _root_mode == "shard":
-        train_f = cut_lineage(
-            train_f.withColumn(
-                "__batch", knuth_hash(F.col("node_id"), seed + 7) % F.lit(n_batches)
-            ),
-            eager=True,
-        )
-        present = {
-            int(r["__batch"])
-            for r in train_f.select("__batch").distinct().collect()
-        }
-        if present != set(range(n_batches)):
-            raise ValueError(
-                "train_relational_stack: a batch is empty — lower n_batches "
-                "or grow the input"
-            )
-
-        def batch_arrays(bi):
-            return _to_arrays(
-                train_f.filter(F.col("__batch") == bi).drop("__batch").collect()
-            )
-
-        def batch_keys_df(bi):
-            return F.broadcast(
-                train_f.filter(F.col("__batch") == bi).select(
-                    F.col("node_id").alias("parent_key")
-                )
-            )
-
-    else:
-        ids, codes, nums, y = _to_arrays(train_f.collect())
-        batch_of = np.array(
-            [knuth_hash_py(int(i), seed + 7) % n_batches for i in ids],
-            dtype=np.int64,
-        )
-        if set(np.unique(batch_of)) != set(range(n_batches)):
-            raise ValueError(
-                "train_relational_stack: a batch is empty — lower n_batches "
-                "or grow the input"
-            )
-
-        def batch_arrays(bi):
-            sel = batch_of == bi
-            return ids[sel], codes[sel], nums[sel], y[sel]
-
-        def batch_keys_df(bi):
-            return F.broadcast(
-                spark.createDataFrame(
-                    [(int(i),) for i in ids[batch_of == bi]],
-                    "parent_key bigint",
-                )
-            )
 
     k = meta["n_classes"]
     m = meta["n_num"]
@@ -808,11 +830,7 @@ def train_relational_stack(
     for i in range(L):
         E0 = rng.uniform(-0.5, 0.5, size=(cards[i], layers[i].emb_dim))
         l_emb.append(_emb_to_frame(spark, E0) if use_frame[i] else E0)
-    dims = []  # (d_e, nx, d, m_i) per layer
-    for i, spec in enumerate(layers):
-        d_child = layers[i + 1].hidden_dim if i + 1 < L else 0
-        m_i = spec.emb_dim + spec.n_feats + d_child
-        dims.append((spec.emb_dim, spec.n_feats, spec.hidden_dim, m_i))
+    dims = _layer_dims(layers)
     l_W = [
         rng.uniform(-0.5, 0.5, size=(dims[i][3], dims[i][2])) * 0.1 for i in range(L)
     ]
@@ -821,39 +839,22 @@ def train_relational_stack(
     W_head = rng.uniform(-0.5, 0.5, size=(dim + m + d1, k)) * 0.1
     b_head = np.zeros(k)
 
-    def forward_chain(level_frames):
-        """hbar frames bottom-up; returns (top fold frame keyed by
-        root, child_hb_for: per-level child fold frames)."""
-        child_hb_for: dict[int, DataFrame | None] = {L - 1: None}
-        hb = None
-        for i in reversed(range(L)):
-            d_child = dims[i + 1][2] if i + 1 < L else 0
-            hbf = _layer_forward_frame(
-                level_frames[i], l_emb[i], l_W[i], l_b[i], dims[i][2],
-                child_hb=hb, d_child=d_child,
-            )
-            if i > 0:
-                hbf = cut_lineage(hbf, eager=True)
-                child_hb_for[i - 1] = hbf
-            hb = hbf
-        return hb, child_hb_for
-
     # receptive-field pruning, built ONCE per batch (the portable-hash
     # batches never change across epochs): broadcast semi-joins down
-    # the stack (or the driver-side isin literal, for the pinned
-    # equality test), materialized so every epoch's steps reuse the
-    # pruned frames instead of re-running the join chain per action
+    # the stack, materialized so every epoch's steps reuse the pruned
+    # frames instead of re-running the join chain per action
     batch_frames: list[list[DataFrame]] = []
     for bi in range(n_batches):
-        f_b: list[DataFrame] = []
-        if _batch_mode == "semi":
-            cur = frames[0].join(batch_keys_df(bi), "parent_key", "leftsemi")
-        else:
-            bids = ids[batch_of == bi]
-            cur = frames[0].filter(
-                F.col("parent_key").isin([int(i) for i in bids])
+        batch_keys = F.broadcast(
+            train_f.filter(F.col("__batch") == bi).select(
+                F.col("node_id").alias("parent_key")
             )
-        f_b.append(cut_lineage(cur, eager=True))
+        )
+        f_b = [
+            cut_lineage(
+                frames[0].join(batch_keys, "parent_key", "leftsemi"), eager=True
+            )
+        ]
         for i in range(1, L):
             parent_keys = f_b[i - 1].select(
                 F.col("child_key").alias("parent_key")
@@ -873,7 +874,7 @@ def train_relational_stack(
             n_b = len(bids)
             f_b = batch_frames[bi]
 
-            hb1, child_hb_for = forward_chain(f_b)
+            hb1, child_hb_for = _forward_chain(f_b, l_emb, l_W, l_b, dims)
             hbar = np.zeros((n_b, d1))
             degs = np.zeros(n_b, dtype=np.int64)
             hb_rows = {
@@ -954,9 +955,9 @@ def train_relational_stack(
                 l_W[i] -= lr * (dW / n_b + l2 * l_W[i])
                 l_b[i] -= lr * (db_i / n_b)
 
-    accuracy = _stack_eval(
-        frame, frames, emb, l_emb, l_W, l_b, W_head, b_head, dims, L,
-        mode=_eval_mode, task=task,
+    top_hb, _ = _forward_chain(frames, l_emb, l_W, l_b, dims)
+    accuracy = _split_metric(
+        _score_roots(frame, top_hb, emb, W_head, b_head, d1, task), task
     )
     params = {
         "emb": emb,
@@ -969,118 +970,23 @@ def train_relational_stack(
     return TrainResult(losses=losses, accuracy=accuracy, params=params)
 
 
-def _stack_eval(
-    frame,
-    frames,
-    emb,
-    l_emb,
-    l_W,
-    l_b,
-    W_head,
-    b_head,
-    dims,
-    L,
-    mode="join",
-    task="classification",
-):
-    """Final per-split metric with the trained parameters — accuracy
-    (argmax) for classification, MSE in standardized-label space for
-    regression. The ``"join"`` path (default — VERDICT r4 #2a) joins
-    the full trained hbar onto the root frame and predicts in an Arrow
-    UDF (one Spark job, nothing root-sized on the driver);
-    ``"collect"`` is the original driver-side loop, kept only so tests
-    can pin bit-equality. Both use the same fixed-order ``row_logits``
-    accumulation per row."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    d1 = dims[0][2]
-    regression = task == "regression"
-    hb = None
-    for i in reversed(range(L)):
-        d_child = dims[i + 1][2] if i + 1 < L else 0
-        hb = _layer_forward_frame(
-            frames[i], l_emb[i], l_W[i], l_b[i], dims[i][2],
-            child_hb=hb, d_child=d_child,
+def _check_layer_params(params: dict, layers, dims) -> None:
+    """Refuse a model whose layer count or ``W`` shapes do not fit
+    ``layers``: the kernels index only the input columns the specs
+    give them, so a mismatched model would score without any error."""
+    if len(params["layers"]) != len(layers):
+        raise ValueError(
+            f"predict_relational_stack: the model has {len(params['layers'])} "
+            f"layer(s) but layers= declares {len(layers)} — pass the layers "
+            "the model was trained with"
         )
-        if i > 0:
-            hb = cut_lineage(hb, eager=True)
-
-    if mode == "collect":
-        from decimal import Decimal
-
-        hb_all = {
-            int(r["parent_key"]): np.array(r["hbar"]) for r in hb.collect()
-        }
-        acc: dict[str, list] = {}
-        for r in frame.select("node_id", "code", "nums", "label", "split").collect():
-            hvec = hb_all.get(int(r["node_id"]), np.zeros(d1))
-            X = np.concatenate(
-                [emb[int(r["code"])], np.array(list(r["nums"])), hvec]
+    for i, (p, (_, _, d, m_i)) in enumerate(zip(params["layers"], dims)):
+        if np.shape(p["W"]) != (m_i, d):
+            raise ValueError(
+                f"predict_relational_stack: layer {i} ({layers[i].table}) W "
+                f"has shape {np.shape(p['W'])}, its spec needs {(m_i, d)} — "
+                "pass the layers the model was trained with"
             )
-            out = row_logits(X[None, :], W_head, b_head)[0]
-            if regression:
-                err = out[0] - r["label"]
-                # dec9-quantized like the join path's decimal fold, so
-                # the two eval modes stay bit-identical
-                acc.setdefault(r["split"], []).append(
-                    _dec9_py(Decimal, err * err)
-                )
-            else:
-                pred = int(np.argmax(out))
-                acc.setdefault(r["split"], []).append(float(pred == r["label"]))
-        if regression:
-            return {s: float(sum(v)) / len(v) for s, v in acc.items()}
-        return {s: sum(v) / len(v) for s, v in acc.items()}
-
-    Ec, Wc, bc = emb.copy(), W_head.copy(), b_head.copy()
-
-    def pred_fn(code, nums, hbar):
-        codes = code.to_numpy(dtype=np.int64)
-        X = np.concatenate(
-            [Ec[codes], np.vstack(nums.to_list()), np.vstack(hbar.to_list())], axis=1
-        )
-        out = row_logits(X, Wc, bc)
-        if regression:
-            return pd.Series(out[:, 0])
-        return pd.Series(np.argmax(out, axis=1).astype(np.int64))
-
-    pred_fn.__annotations__ = {
-        "code": pd.Series,
-        "nums": pd.Series,
-        "hbar": pd.Series,
-        "return": pd.Series,
-    }
-    pudf = pandas_udf(pred_fn, "double" if regression else "bigint")
-    zeros = F.array(*[F.lit(0.0)] * d1)
-    joined = (
-        frame.join(
-            hb.select(F.col("parent_key").alias("node_id"), "hbar"),
-            "node_id",
-            "left",
-        )
-        .withColumn("hbar", F.coalesce("hbar", zeros))
-    )
-    err = F.col("pred") - F.col("label")
-    if regression:
-        # exact decimal fold: a plain avg of doubles depends on the
-        # partition summation order — the fold makes the MSE
-        # partitioning-independent and bit-equal to the collect path
-        metric = (
-            F.sum((err * err).cast(DECIMAL_TYPE)).cast("double")
-            / F.count(F.lit(1))
-        )
-    else:
-        metric = F.avg((F.col("pred") == F.col("label")).cast("double"))
-    rows = (
-        joined.select(
-            "split", "label", pudf("code", "nums", "hbar").alias("pred")
-        )
-        .groupBy("split")
-        .agg(metric.alias("m"))
-        .collect()
-    )
-    return {r["split"]: r["m"] for r in rows}
 
 
 def predict_relational_stack(
@@ -1099,7 +1005,7 @@ def predict_relational_stack(
     """Batch inference: score every root node with a trained stack's
     parameters (``result`` is the :class:`TrainResult` from
     :func:`train_relational_stack`, or its ``params`` dict) — the
-    write-predictions-back surface the metric-only ``_stack_eval``
+    write-predictions-back surface the trainer's metric-only eval
     doesn't expose. Returns ``(node_id, label, split, pred)`` — and for
     regression also ``pred_raw`` (de-standardized with the train-split
     mean/std the assembly recorded), since ``pred``/``label`` live in
@@ -1109,81 +1015,46 @@ def predict_relational_stack(
     step): the feature assembly — aggregation stats standardization,
     label factorization, splits — derives from THIS database with THIS
     seed, exactly as at train time, so pass the same arguments the
-    trainer got. Per-split accuracy/MSE aggregated from this frame is
-    bit-identical to ``result.accuracy`` (pinned in tests).
+    trainer got. A model whose layer count or weight shapes do not
+    match ``layers`` and the assembled root frame raises
+    ``ValueError``. Per-split accuracy/MSE aggregated from this frame
+    is bit-identical to ``result.accuracy`` (pinned in tests).
 
-    Scale shape: the forward folds are the trainer's own
-    ``_layer_forward_frame`` chain (per-layer lineage-cut); prediction
-    is ONE Arrow pass over the root frame joined to the top fold —
-    nothing root-sized on the driver."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
+    Scale shape: the trainer's own forward chain and root scorer — the
+    forward folds are per-layer lineage-cut, and prediction is ONE
+    Arrow pass over the root frame joined to the top fold — nothing
+    root-sized on the driver."""
     params = result.params if isinstance(result, TrainResult) else result
-    L = len(layers)
+    dims = _layer_dims(layers)
+    _check_layer_params(params, layers, dims)
     frame, meta = assemble_training_frame(
         tables, primary_keys, foreign_keys, target, cat_col, num_cols,
         seed=seed, neighbor_budget=neighbor_budget, task=task,
     )
+    d1 = dims[0][2]
+    want = (np.shape(params["emb"])[1] + meta["n_num"] + d1, meta["n_classes"])
+    if np.shape(params["W_head"]) != want:
+        raise ValueError(
+            f"predict_relational_stack: W_head has shape "
+            f"{np.shape(params['W_head'])}, this root frame and layer 0 need "
+            f"{want} — pass the target, features and task the model was "
+            "trained with"
+        )
     frames = [
         cut_lineage(_assemble_child_frame(tables, spec, seed)[0], eager=True)
         for spec in layers
     ]
-    dims = []
-    for i, spec in enumerate(layers):
-        d_child = layers[i + 1].hidden_dim if i + 1 < L else 0
-        dims.append(
-            (spec.emb_dim, spec.n_feats, spec.hidden_dim,
-             spec.emb_dim + spec.n_feats + d_child)
-        )
-    l_emb = [p["emb"] for p in params["layers"]]
-    l_W = [p["W"] for p in params["layers"]]
-    l_b = [p["b"] for p in params["layers"]]
-    hb = None
-    for i in reversed(range(L)):
-        d_child = dims[i + 1][2] if i + 1 < L else 0
-        hb = _layer_forward_frame(
-            frames[i], l_emb[i], l_W[i], l_b[i], dims[i][2],
-            child_hb=hb, d_child=d_child,
-        )
-        if i > 0:
-            hb = cut_lineage(hb, eager=True)
-
-    d1 = dims[0][2]
-    regression = task == "regression"
-    Ec = params["emb"].copy()
-    Wc, bc = params["W_head"].copy(), params["b_head"].copy()
-
-    def pred_fn(code, nums, hbar):
-        codes = code.to_numpy(dtype=np.int64)
-        X = np.concatenate(
-            [Ec[codes], np.vstack(nums.to_list()), np.vstack(hbar.to_list())],
-            axis=1,
-        )
-        out = row_logits(X, Wc, bc)
-        if regression:
-            return pd.Series(out[:, 0])
-        return pd.Series(np.argmax(out, axis=1).astype(np.int64))
-
-    pred_fn.__annotations__ = {
-        "code": pd.Series, "nums": pd.Series, "hbar": pd.Series,
-        "return": pd.Series,
-    }
-    pudf = pandas_udf(pred_fn, "double" if regression else "bigint")
-    zeros = F.array(*[F.lit(0.0)] * d1)
-    out = (
-        frame.join(
-            hb.select(F.col("parent_key").alias("node_id"), "hbar"),
-            "node_id",
-            "left",
-        )
-        .withColumn("hbar", F.coalesce("hbar", zeros))
-        .select(
-            "node_id", "label", "split",
-            pudf("code", "nums", "hbar").alias("pred"),
-        )
+    top_hb, _ = _forward_chain(
+        frames,
+        [p["emb"] for p in params["layers"]],
+        [p["W"] for p in params["layers"]],
+        [p["b"] for p in params["layers"]],
+        dims,
     )
-    if regression:
+    out = _score_roots(
+        frame, top_hb, params["emb"], params["W_head"], params["b_head"], d1, task
+    )
+    if task == "regression":
         out = out.withColumn(
             "pred_raw",
             F.col("pred") * F.lit(float(meta["y_std"]))

@@ -168,7 +168,7 @@ def _fit_linear_head(
     preds = full.select("split", "label", pudf("x").alias("pred"))
     if regression:
         # decimal fold: partitioning-independent MSE in standardized-
-        # label space (the _stack_eval convention)
+        # label space (the convention of stack._split_metric)
         err = F.col("pred") - F.col("label")
         rows = (
             preds.groupBy("split")

@@ -93,7 +93,10 @@ def _gradient_pass(df, E, Wc, bc, dim, m, k, card, task="classification"):
     exact decimal sums per code group and accumulated on the driver.
     Returns ``(loss_sum, resid_tot, GW, resid_by_code)`` — the raw
     (unnormalized, unregularized) sums, bit-deterministic under any
-    partitioning. Shared by the full-batch and minibatch trainers.
+    partitioning. One step of :func:`_train_linear`, the loop behind
+    all three linear trainers; its reference is the independent twin
+    ``plans/train_oracle.py:_step_gradients``, which replays the same
+    folds bit for bit.
 
     ``task``: ``"classification"`` (softmax cross-entropy over k
     classes, int labels) or ``"regression"`` (k=1 linear output,
@@ -370,83 +373,41 @@ def train_relational_classifier(
     updates are float64 on the driver — the loss trajectory is
     bit-reproducible, strictly decreasing at this lr on the bench data.
     """
-    import numpy as np
-
     frame, meta = assemble_training_frame(
         tables, primary_keys, foreign_keys, target, cat_col, num_cols, seed=seed
     )
     if fit_fn is not None:
         return fit_fn(frame, meta)
-
-    k = meta["n_classes"]
-    m = meta["n_num"]
-    card = meta["n_codes"]
-    rng = np.random.default_rng(seed)
-    emb = rng.uniform(-0.5, 0.5, size=(card, dim))
-    W = rng.uniform(-0.5, 0.5, size=(dim + m, k)) * 0.1
-    b = np.zeros(k)
-
-    train = frame.filter(F.col("split") == "train").select("code", "nums", "label")
-    sc = train.sparkSession.sparkContext
-    parts = max(1, min(sc.defaultParallelism, 8))
-    train = train.repartition(parts).persist()
-    try:
-        n_train = train.count()
-
-        losses: list[float] = []
-        for _ in range(epochs):
-            E, Wc, bc = emb.copy(), W.copy(), b.copy()
-            loss_sum, resid_tot, GW, resid_by_code = _gradient_pass(
-                train, E, Wc, bc, dim, m, k, card
-            )
-            loss = loss_sum / n_train + 0.5 * l2 * (
-                float((W * W).sum()) + float((emb * emb).sum())
-            )
-            losses.append(loss)
-            # update: decoder, bias, and the embedding code table
-            # (join-apply-update: dE[c] = Σ_{rows with code c} resid · Wᵀ).
-            # All three gradients use the EPOCH-START weights (Wc — the
-            # same copy the forward pass saw): mixing the already-updated
-            # W into dE would make the step not-the-gradient of the
-            # stated objective and can break monotone descent.
-            emb -= lr * (resid_by_code @ Wc[:dim].T / n_train + l2 * emb)
-            W -= lr * (GW / n_train + l2 * W)
-            b -= lr * resid_tot / n_train
-
-        accuracy = _split_accuracy(frame, emb, W, b)
-    finally:
-        # a failed epoch must not leak the pinned frame
-        train.unpersist()
-    return TrainResult(
-        losses=losses,
-        accuracy=accuracy,
-        params={"emb": emb, "W": W, "b": b},
+    return _train_linear(
+        frame, meta, "classification", dim, epochs, 1, lr, l2, seed
     )
 
 
-def _split_eval(frame, emb, W, b, kind: str) -> dict[str, float]:
-    """Per-split metric with the trained parameters — one Spark job.
-    ``kind``: ``"accuracy"`` (argmax prediction) or ``"mse"``
-    (linear-head prediction, standardized-label space)."""
+def _split_eval(frame, emb, W, b, task: str) -> dict[str, float]:
+    """Per-split metric with the trained parameters — one Spark job:
+    accuracy (argmax prediction) for classification, MSE
+    (linear-head prediction, standardized-label space) for
+    regression."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
+    regression = task == "regression"
     Ef, Wf, bf = emb.copy(), W.copy(), b.copy()
 
     def pred_fn(code, nums):
         codes = code.to_numpy(dtype=np.int64)
         X = np.concatenate([Ef[codes], np.vstack(nums.to_list())], axis=1)
         out = row_logits(X, Wf, bf)
-        if kind == "mse":
+        if regression:
             return pd.Series(out[:, 0])
         return pd.Series(np.argmax(out, axis=1).astype(np.int64))
 
     pred_fn.__annotations__ = {"code": pd.Series, "nums": pd.Series, "return": pd.Series}
-    pudf = pandas_udf(pred_fn, "double" if kind == "mse" else "bigint")
+    pudf = pandas_udf(pred_fn, "double" if regression else "bigint")
     err = F.col("pred") - F.col("label")
     metric = (
-        F.avg(err * err) if kind == "mse"
+        F.avg(err * err) if regression
         else F.avg((F.col("pred") == F.col("label")).cast("double"))
     )
     rows = (
@@ -458,8 +419,96 @@ def _split_eval(frame, emb, W, b, kind: str) -> dict[str, float]:
     return {r["split"]: r["m"] for r in rows}
 
 
-def _split_accuracy(frame, emb, W, b) -> dict[str, float]:
-    return _split_eval(frame, emb, W, b, "accuracy")
+def _train_linear(
+    frame: DataFrame,
+    meta: dict,
+    task: str,
+    dim: int,
+    epochs: int,
+    n_batches: int,
+    lr: float,
+    l2: float,
+    seed: int,
+) -> TrainResult:
+    """The one SGD loop behind the three linear trainers. Train roots
+    go to ``n_batches`` batches by the portable Knuth hash of their
+    node id; each step is ONE :func:`_gradient_pass` job over its
+    batch of the persisted frame, normalized by the batch size.
+    ``n_batches=1`` is full-batch gradient descent: the hash ``% 1``
+    puts every root in batch 0, and the decimal folds do not depend on
+    row order. The recorded loss is the batch mean loss plus the L2
+    term at the step-start parameters. ``TrainResult.accuracy``
+    carries per-split accuracy, or MSE for regression (whose params
+    also carry the label's ``y_mean``/``y_std``)."""
+    import numpy as np
+
+    from ..functions.hashing import knuth_hash
+
+    k = meta["n_classes"]
+    m = meta["n_num"]
+    card = meta["n_codes"]
+    rng = np.random.default_rng(seed)
+    emb = rng.uniform(-0.5, 0.5, size=(card, dim))
+    W = rng.uniform(-0.5, 0.5, size=(dim + m, k)) * 0.1
+    b = np.zeros(k)
+
+    train = (
+        frame.filter(F.col("split") == "train")
+        .select(
+            (knuth_hash(F.col("node_id"), seed + 7) % n_batches).alias("batch"),
+            "code",
+            "nums",
+            "label",
+        )
+    )
+    sc = train.sparkSession.sparkContext
+    parts = max(1, min(sc.defaultParallelism, 8))
+    train = train.repartition(parts).persist()
+    try:
+        batch_sizes = {
+            r["batch"]: r["count"] for r in train.groupBy("batch").count().collect()
+        }
+        # an empty batch shows up as a MISSING key (groupBy never emits
+        # a 0-count row), so presence of every batch id is the check
+        if set(batch_sizes) != set(range(n_batches)):
+            raise ValueError(
+                f"a batch is empty (sizes={batch_sizes}) — lower n_batches "
+                "or grow the input"
+            )
+
+        losses: list[float] = []
+        for _ in range(epochs):
+            for bi in range(n_batches):
+                n_b = batch_sizes[bi]
+                E, Wc, bc = emb.copy(), W.copy(), b.copy()
+                loss_sum, resid_tot, GW, resid_by_code = _gradient_pass(
+                    train.filter(F.col("batch") == bi).select(
+                        "code", "nums", "label"
+                    ),
+                    E, Wc, bc, dim, m, k, card, task=task,
+                )
+                loss = loss_sum / n_b + 0.5 * l2 * (
+                    float((W * W).sum()) + float((emb * emb).sum())
+                )
+                losses.append(loss)
+                # update: decoder, bias, and the embedding code table
+                # (join-apply-update: dE[c] = Σ_{rows with code c} resid · Wᵀ).
+                # All three gradients use the STEP-START weights (Wc — the
+                # same copy the forward pass saw): mixing the already-updated
+                # W into dE would make the step not-the-gradient of the
+                # stated objective and can break monotone descent.
+                emb -= lr * (resid_by_code @ Wc[:dim].T / n_b + l2 * emb)
+                W -= lr * (GW / n_b + l2 * W)
+                b -= lr * resid_tot / n_b
+
+        accuracy = _split_eval(frame, emb, W, b, task)
+    finally:
+        # a failed step must not leak the pinned frame
+        train.unpersist()
+    params = {"emb": emb, "W": W, "b": b}
+    if task == "regression":
+        params.update(y_mean=meta["y_mean"], y_std=meta["y_std"])
+    return TrainResult(losses=losses, accuracy=accuracy, params=params)
 
 
 def train_relational_minibatch(
@@ -504,10 +553,6 @@ def train_relational_minibatch(
     assembled frame bucketed by ``batch`` so each step's filter prunes
     to its own files instead of scanning all batches.
     """
-    import numpy as np
-
-    from ..functions.hashing import knuth_hash
-
     frame, meta = assemble_training_frame(
         tables,
         primary_keys,
@@ -518,78 +563,9 @@ def train_relational_minibatch(
         seed=seed,
         neighbor_budget=neighbor_budget,
     )
-    k = meta["n_classes"]
-    m = meta["n_num"]
-    card = meta["n_codes"]
-    rng = np.random.default_rng(seed)
-    emb = rng.uniform(-0.5, 0.5, size=(card, dim))
-    W = rng.uniform(-0.5, 0.5, size=(dim + m, k)) * 0.1
-    b = np.zeros(k)
-
-    train = (
-        frame.filter(F.col("split") == "train")
-        .select(
-            (knuth_hash(F.col("node_id"), seed + 7) % n_batches).alias("batch"),
-            "code",
-            "nums",
-            "label",
-        )
+    return _train_linear(
+        frame, meta, "classification", dim, epochs, n_batches, lr, l2, seed
     )
-    sc = train.sparkSession.sparkContext
-    parts = max(1, min(sc.defaultParallelism, 8))
-    train = train.repartition(parts).persist()
-    try:
-        batch_sizes = {
-            r["batch"]: r["count"] for r in train.groupBy("batch").count().collect()
-        }
-        # an empty batch shows up as a MISSING key (groupBy never emits
-        # a 0-count row), so presence of every batch id is the check
-        if set(batch_sizes) != set(range(n_batches)):
-            raise ValueError(
-                f"train_relational_minibatch: a batch is empty "
-                f"(sizes={batch_sizes}) — lower n_batches or grow the input"
-            )
-
-        losses: list[float] = []
-        for _ in range(epochs):
-            for bi in range(n_batches):
-                n_b = batch_sizes[bi]
-                E, Wc, bc = emb.copy(), W.copy(), b.copy()
-                loss_sum, resid_tot, GW, resid_by_code = _gradient_pass(
-                    train.filter(F.col("batch") == bi).select(
-                        "code", "nums", "label"
-                    ),
-                    E,
-                    Wc,
-                    bc,
-                    dim,
-                    m,
-                    k,
-                    card,
-                )
-                loss = loss_sum / n_b + 0.5 * l2 * (
-                    float((W * W).sum()) + float((emb * emb).sum())
-                )
-                losses.append(loss)
-                # same step rule as the full-batch path, normalized by
-                # the BATCH size (the gradient estimates the full one)
-                emb -= lr * (resid_by_code @ Wc[:dim].T / n_b + l2 * emb)
-                W -= lr * (GW / n_b + l2 * W)
-                b -= lr * resid_tot / n_b
-
-        accuracy = _split_accuracy(frame, emb, W, b)
-    finally:
-        train.unpersist()
-    return TrainResult(
-        losses=losses,
-        accuracy=accuracy,
-        params={"emb": emb, "W": W, "b": b},
-    )
-
-
-def _split_mse(frame, emb, W, b) -> dict[str, float]:
-    """Per-split MSE (standardized-label space) — see :func:`_split_eval`."""
-    return _split_eval(frame, emb, W, b, "mse")
 
 
 def train_relational_regressor(
@@ -618,8 +594,6 @@ def train_relational_regressor(
     and oracle-checked (``plans/train_oracle.py:_regression_losses``).
     ``TrainResult.accuracy`` carries per-split MSE (standardized
     space)."""
-    import numpy as np
-
     frame, meta = assemble_training_frame(
         tables,
         primary_keys,
@@ -630,43 +604,7 @@ def train_relational_regressor(
         seed=seed,
         task="regression",
     )
-    k = 1
-    m = meta["n_num"]
-    card = meta["n_codes"]
-    rng = np.random.default_rng(seed)
-    emb = rng.uniform(-0.5, 0.5, size=(card, dim))
-    W = rng.uniform(-0.5, 0.5, size=(dim + m, k)) * 0.1
-    b = np.zeros(k)
-
-    train = frame.filter(F.col("split") == "train").select("code", "nums", "label")
-    sc = train.sparkSession.sparkContext
-    parts = max(1, min(sc.defaultParallelism, 8))
-    train = train.repartition(parts).persist()
-    try:
-        n_train = train.count()
-
-        losses: list[float] = []
-        for _ in range(epochs):
-            E, Wc, bc = emb.copy(), W.copy(), b.copy()
-            loss_sum, resid_tot, GW, resid_by_code = _gradient_pass(
-                train, E, Wc, bc, dim, m, k, card, task="regression"
-            )
-            loss = loss_sum / n_train + 0.5 * l2 * (
-                float((W * W).sum()) + float((emb * emb).sum())
-            )
-            losses.append(loss)
-            emb -= lr * (resid_by_code @ Wc[:dim].T / n_train + l2 * emb)
-            W -= lr * (GW / n_train + l2 * W)
-            b -= lr * resid_tot / n_train
-
-        mse = _split_mse(frame, emb, W, b)
-    finally:
-        train.unpersist()
-    return TrainResult(
-        losses=losses,
-        accuracy=mse,
-        params={"emb": emb, "W": W, "b": b, "y_mean": meta["y_mean"], "y_std": meta["y_std"]},
-    )
+    return _train_linear(frame, meta, "regression", dim, epochs, 1, lr, l2, seed)
 
 
 # ------------------------------------------------- two-layer training

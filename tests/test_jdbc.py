@@ -187,6 +187,11 @@ def test_live_derby_end_to_end(spark, tmp_path):
 
     url = f"jdbc:derby:{tmp_path}/derbydb;create=true"
     jvm = spark._jvm
+    # Derby writes derby.log into the working directory unless told
+    # otherwise; the property is read when the first connection boots it
+    jvm.java.lang.System.setProperty(
+        "derby.stream.error.file", str(tmp_path / "derby.log")
+    )
     conn = jvm.java.sql.DriverManager.getConnection(url)
     st = conn.createStatement()
     st.executeUpdate(

@@ -125,6 +125,17 @@ def test_minibatch_matches_numpy_decimal_twin(db):
     assert res.losses == twin
 
 
+def test_classifier_matches_numpy_decimal_twin(db):
+    """The full-batch classifier (the shared SGD loop at one batch)
+    is recomputed bit-for-bit by the independent oracle twin."""
+    from deep_db_learning_spark.plans.train_oracle import _train_losses
+
+    res = train_relational_classifier(
+        db.tables, db.primary_keys, db.foreign_keys, epochs=3, seed=42
+    )
+    assert res.losses == _train_losses("/root/testdata/sf0.001", epochs=3, seed=42)
+
+
 def test_neighbor_budget_caps_receptive_field(db):
     """aggregate_along_edge(neighbor_budget=k): degree <= k, the sample
     equals sample_neighbors on the edge list, and every sampled src row
@@ -350,34 +361,36 @@ def test_stack_second_edge_matches_twin(db):
     assert res.losses[-1] < res.losses[0]
 
 
-def test_stack_three_layer_matches_twin(db):
+@pytest.mark.parametrize("n_batches,seed", [(2, 42), (3, 7)])
+def test_stack_three_layer_matches_twin(db, n_batches, seed):
     """Ask r4 #5 — depth-3 (customer ← orders ← lineitem): the
     aggregation-of-aggregation gradient. Both hidden weight matrices
     and all three embedding tables move off their inits, and the twin
     recomputes every step's loss bit-for-bit (including the composite
-    -PK lineitem key packing and its budget sample)."""
+    -PK lineitem key packing and its budget sample) AND the per-split
+    accuracy of the joined-hbar eval; three batches exercise the
+    Spark-side root sharding with an uneven batch split."""
     import numpy as np
 
     from deep_db_learning_spark.plans.stack import (
         THREE_LAYER_SPECS,
         train_relational_stack,
     )
-    from deep_db_learning_spark.plans.train_oracle import _three_layer_losses
+    from deep_db_learning_spark.plans.train_oracle import _stack_losses
 
+    kw = dict(epochs=2, n_batches=n_batches, seed=seed, neighbor_budget=5)
     res = train_relational_stack(
         db.tables, db.primary_keys, db.foreign_keys,
-        layers=THREE_LAYER_SPECS, epochs=2, n_batches=2, seed=42,
-        neighbor_budget=5,
+        layers=THREE_LAYER_SPECS, **kw,
     )
-    twin = _three_layer_losses(
-        "/root/testdata/sf0.001", epochs=2, n_batches=2, seed=42,
-        neighbor_budget=5,
+    twin, twin_acc = _stack_losses(
+        "/root/testdata/sf0.001", THREE_LAYER_SPECS, with_accuracy=True, **kw
     )
     assert res.losses == twin
-    assert len(res.losses) == 4
+    assert len(res.losses) == 2 * n_batches
+    assert res.accuracy == twin_acc
     # replay the init draws to prove every deep parameter trained
-    card0 = res.params["emb"].shape[0]
-    rng = np.random.default_rng(42)
+    rng = np.random.default_rng(seed)
     rng.uniform(-0.5, 0.5, size=res.params["emb"].shape)
     for lay in res.params["layers"]:
         init = rng.uniform(-0.5, 0.5, size=lay["emb"].shape)
@@ -388,73 +401,11 @@ def test_stack_three_layer_matches_twin(db):
         assert np.any(lay["b"] != 0.0)
 
 
-def test_stack_scale_swaps_bit_identical(db):
-    """Ask r4 #2 — the scale paths ARE the defaults and are bit-equal
-    to the driver-side reference paths: broadcast semi-join batching
-    vs the isin literal, and the joined-hbar Arrow-UDF eval vs the
-    collected-root loop. Same losses, same accuracies, same
-    parameters."""
-    import numpy as np
-
-    from deep_db_learning_spark.plans.stack import train_relational_stack
-
-    kw = dict(epochs=2, n_batches=2, seed=42, neighbor_budget=5)
-    scale = train_relational_stack(
-        db.tables, db.primary_keys, db.foreign_keys,
-        _batch_mode="semi", _eval_mode="join", _root_mode="shard", **kw,
-    )
-    ref = train_relational_stack(
-        db.tables, db.primary_keys, db.foreign_keys,
-        _batch_mode="isin", _eval_mode="collect", _root_mode="collect", **kw,
-    )
-    assert scale.losses == ref.losses
-    assert scale.accuracy == ref.accuracy
-    assert np.array_equal(scale.params["emb"], ref.params["emb"])
-    assert np.array_equal(scale.params["W_head"], ref.params["W_head"])
-    for a, b in zip(scale.params["layers"], ref.params["layers"]):
-        assert np.array_equal(a["W"], b["W"])
-        assert np.array_equal(a["emb"], b["emb"])
-        assert np.array_equal(a["b"], b["b"])
-
-
-def test_stack_root_shard_bit_identical(db):
-    """Ask r5 #1 — the sharded root path (Spark-side batch hash +
-    per-step O(batch) collect, the new default) reproduces the
-    up-front all-roots collect bit-for-bit, and the isin literal
-    refuses to run without the driver-side ids it needs."""
-    import numpy as np
-    import pytest
-
-    from deep_db_learning_spark.plans.stack import train_relational_stack
-
-    kw = dict(epochs=2, n_batches=3, seed=7, neighbor_budget=5)
-    shard = train_relational_stack(
-        db.tables, db.primary_keys, db.foreign_keys, _root_mode="shard", **kw,
-    )
-    coll = train_relational_stack(
-        db.tables, db.primary_keys, db.foreign_keys, _root_mode="collect", **kw,
-    )
-    assert shard.losses == coll.losses
-    assert shard.accuracy == coll.accuracy
-    assert np.array_equal(shard.params["emb"], coll.params["emb"])
-    assert np.array_equal(shard.params["W_head"], coll.params["W_head"])
-    for a, b in zip(shard.params["layers"], coll.params["layers"]):
-        assert np.array_equal(a["emb"], b["emb"])
-        assert np.array_equal(a["W"], b["W"])
-
-    with pytest.raises(ValueError, match="isin"):
-        train_relational_stack(
-            db.tables, db.primary_keys, db.foreign_keys,
-            _batch_mode="isin", _root_mode="shard", **kw,
-        )
-
-
 def test_stack_regression_matches_twin(db):
     """The stack's regression head (k=1 linear, half-squared error,
     train-standardized c_acctbal label — the MSELoss branch) trains
     through the deep layers too: engine and twin agree bit-for-bit on
-    every step loss AND on the decimal-folded per-split MSE, and the
-    joined-hbar eval equals the collect eval exactly."""
+    every step loss AND on the decimal-folded per-split MSE."""
     from dataclasses import replace
 
     from deep_db_learning_spark.plans.stack import (
@@ -490,15 +441,33 @@ def test_stack_regression_matches_twin(db):
     assert res.losses == twin_losses
     assert len(res.losses) == 4
     assert res.accuracy == twin_mse
-    ref = train_relational_stack(
-        db.tables, db.primary_keys, db.foreign_keys,
-        _batch_mode="isin", _eval_mode="collect", _root_mode="collect", **kw,
+
+
+@pytest.fixture(scope="module")
+def childless_db(spark):
+    """40 roots; every child row points at a root id outside the table,
+    so no root ever has children."""
+    from deep_db_learning_spark.plans.stack import EdgeLayerSpec
+    from deep_db_learning_spark.schema import ForeignKey
+
+    roots = spark.createDataFrame(
+        [(i, i % 3, f"s{i % 2}", float(i)) for i in range(40)],
+        "id bigint, cat int, seg string, x double",
     )
-    assert ref.losses == res.losses
-    assert ref.accuracy == res.accuracy
+    kids = spark.createDataFrame(
+        [(i, 10_000 + i, "a", float(i)) for i in range(20)],
+        "kid bigint, parent bigint, kcat string, kx double",
+    )
+    tables = {"roots": roots, "kids": kids}
+    pks = {"roots": ["id"], "kids": ["kid"]}
+    fks = {"roots": [], "kids": [ForeignKey(["parent"], "roots", ["id"])]}
+    spec = EdgeLayerSpec(
+        table="kids", fk="parent", cat_col="kcat", num_cols=("kx",), key="kid"
+    )
+    return tables, pks, fks, spec
 
 
-def test_stack_childless_roots_and_spec_validation(spark):
+def test_stack_childless_roots_and_spec_validation(childless_db):
     """Degenerate shapes: (a) roots whose batches contain no child rows
     take the zero-gradient branch (head still trains); (b) an inner
     layer without a key expression is rejected up front."""
@@ -511,24 +480,7 @@ def test_stack_childless_roots_and_spec_validation(spark):
         train_relational_stack,
     )
 
-    # 40 roots; every child row points at a root id outside the table,
-    # so no root ever has children
-    roots = spark.createDataFrame(
-        [(i, i % 3, f"s{i % 2}", float(i)) for i in range(40)],
-        "id bigint, cat int, seg string, x double",
-    )
-    kids = spark.createDataFrame(
-        [(i, 10_000 + i, "a", float(i)) for i in range(20)],
-        "kid bigint, parent bigint, kcat string, kx double",
-    )
-    from deep_db_learning_spark.schema import ForeignKey
-
-    tables = {"roots": roots, "kids": kids}
-    pks = {"roots": ["id"], "kids": ["kid"]}
-    fks = {"roots": [], "kids": [ForeignKey(["parent"], "roots", ["id"])]}
-    spec = EdgeLayerSpec(
-        table="kids", fk="parent", cat_col="kcat", num_cols=("kx",), key="kid"
-    )
+    tables, pks, fks, spec = childless_db
     res = train_relational_stack(
         tables, pks, fks,
         layers=(spec,), target=("roots", "seg"), cat_col="cat", num_cols=("x",),
@@ -558,6 +510,26 @@ def test_stack_childless_roots_and_spec_validation(spark):
         ) + (THREE_LAYER_SPECS[1],)
         train_relational_stack(tables, pks, fks, layers=bad, target=("roots", "seg"),
                                cat_col="cat", num_cols=("x",))
+
+
+@pytest.mark.parametrize("trainer", ["stack", "linear"])
+def test_more_batches_than_train_roots_raises(childless_db, trainer):
+    """Both SGD loops refuse a batch count that leaves a batch with no
+    train root (the stack's root sharding and the linear trainers'
+    shared loop)."""
+    from deep_db_learning_spark.plans.stack import train_relational_stack
+    from deep_db_learning_spark.plans.training import train_relational_minibatch
+
+    tables, pks, fks, spec = childless_db
+    kw = dict(target=("roots", "seg"), cat_col="cat", num_cols=("x",),
+              epochs=1, n_batches=64, seed=3)
+    with pytest.raises(ValueError, match="a batch is empty"):
+        if trainer == "stack":
+            train_relational_stack(
+                tables, pks, fks, layers=(spec,), neighbor_budget=None, **kw
+            )
+        else:
+            train_relational_minibatch(tables, pks, fks, **kw)
 
 
 def test_stack_frame_emb_matches_driver_and_twin(db):
@@ -978,6 +950,25 @@ def test_predict_relational_stack_regression_denormalizes(db):
     assert "pred_raw" in preds.columns
     # de-standardization is the affine map recorded at assembly
     assert r["pred_raw"] != r["pred"]
+    # the decimal-folded per-split MSE of the predict frame is the
+    # trainer's own metric, bit for bit
+    from pyspark.sql import functions as F
+
+    from deep_db_learning_spark.functions.exact_agg import DECIMAL_TYPE
+
+    err = F.col("pred") - F.col("label")
+    mse = {
+        r["split"]: r["m"]
+        for r in preds.groupBy("split")
+        .agg(
+            (
+                F.sum((err * err).cast(DECIMAL_TYPE)).cast("double")
+                / F.count(F.lit(1))
+            ).alias("m")
+        )
+        .collect()
+    }
+    assert mse == res.accuracy
 
 
 def test_save_load_stack_model_round_trip(db, tmp_path):
@@ -1018,6 +1009,50 @@ def test_save_load_stack_model_round_trip(db, tmp_path):
         ).collect()
     )
     assert a == b
+
+
+def test_predict_rejects_params_that_do_not_match_layers(db, tmp_path):
+    """A saved depth-3 model predicted with the default one-layer specs
+    must raise, not score silently through the first layer's weights;
+    so must a layer whose W does not fit its spec."""
+    from deep_db_learning_spark.plans.persistence import (
+        load_stack_model,
+        save_stack_model,
+    )
+    from deep_db_learning_spark.plans.stack import (
+        ORDERS_LAYER_SPEC,
+        THREE_LAYER_SPECS,
+        predict_relational_stack,
+        train_relational_stack,
+    )
+
+    res = train_relational_stack(
+        db.tables, db.primary_keys, db.foreign_keys,
+        layers=THREE_LAYER_SPECS, epochs=1, n_batches=1, seed=42,
+        neighbor_budget=5,
+    )
+    path = str(tmp_path / "model")
+    save_stack_model(res, path)
+    params = load_stack_model(db.spark, path)
+    with pytest.raises(ValueError, match="2 layer"):
+        predict_relational_stack(
+            db.tables, db.primary_keys, db.foreign_keys, params,
+            seed=42, neighbor_budget=5,
+        )
+    # same layer count, but the depth-3 first layer's W is (7, 4) and
+    # ORDERS_LAYER_SPEC's input is 4 columns wide
+    one = {**params, "layers": params["layers"][:1]}
+    with pytest.raises(ValueError, match=r"W has shape \(7, 4\)"):
+        predict_relational_stack(
+            db.tables, db.primary_keys, db.foreign_keys, one,
+            layers=(ORDERS_LAYER_SPEC,), seed=42, neighbor_budget=5,
+        )
+    # the matching specs still score every root
+    rows = predict_relational_stack(
+        db.tables, db.primary_keys, db.foreign_keys, params,
+        layers=THREE_LAYER_SPECS, seed=42, neighbor_budget=5,
+    ).collect()
+    assert len(rows) == db.df("customer").count()
 
 
 def test_save_load_frame_embedding_layer(db, tmp_path):
